@@ -696,7 +696,9 @@ def test_knn_join_exact_tie_keeps_lower_id(spark):
     assert got == [3]
 
 
-def test_knn_join_wrong_length_vector_dropped_not_crash(spark):
+def test_knn_join_wrong_length_vector_raises(spark):
+    # a wrong-length vector used to be dropped silently, shortening the
+    # ranking; the shared Gram kernel now rejects it
     from vinum_spark.operators.similarity import knn_join
 
     q = spark.createDataFrame([(0, [1.0, 0.0])], "vec_id long, embedding array<float>")
@@ -704,8 +706,8 @@ def test_knn_join_wrong_length_vector_dropped_not_crash(spark):
         [(1, [1.0, 0.1]), (2, [1.0, 0.1, 0.5])],  # second is wrong-length
         "vec_id long, embedding array<float>",
     )
-    got = [r["vec_id"] for r in knn_join(q, c, k=2, n_blocks=1).collect()]
-    assert got == [1]
+    with pytest.raises(Exception, match="ValueError.*dimension"):
+        knn_join(q, c, k=2, n_blocks=1).collect()
 
 
 def test_ivfpq_recovers_close_neighbor(spark, vectors):

@@ -552,43 +552,58 @@ def test_bucketed_store_delta_join_is_delta_sized(spark, tmp_path):
     assert "Bucketed: true" in plan, plan
 
 
-def test_semantic_dedup_edges_are_grouped_blas_kernel(spark):
-    """semantic_dedup's 100 TB contract: within-cluster pairs come
-    from the per-cluster Gram kernel — ONE FlatMapGroupsInPandas over
-    a single hash Exchange on the cluster id; never a
+@pytest.mark.parametrize("op", ["semantic_dedup", "knn_join"])
+def test_semantic_dedup_edges_are_grouped_blas_kernel(spark, op):
+    """The 100 TB contract of the Gram-kernel operators: semantic_dedup's
+    within-cluster pairs and knn_join's local top-k come from the shared
+    Arrow Gram kernel — ONE FlatMapGroupsInArrow fed by a single hash
+    Exchange on the group key, and no pandas kernel; never a
     BroadcastNestedLoopJoin or cartesian product
     (all-pairs-by-accident), and never the retired pair-expression
     self-join (its per-pair Get/cast chain measured ~14 µs/pair and
     sank the 100× anchor)."""
+    import re as _re
+
     from pyspark.sql import functions as F
 
-    from vinum_spark.operators.similarity import semantic_dedup
-
-    from vinum_spark.operators.similarity import _semantic_edges, ivf_index
+    from vinum_spark.operators.similarity import (
+        _semantic_edges,
+        ivf_index,
+        knn_join,
+        semantic_dedup,
+    )
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    # the full operator's lazy plan hides the edge stage behind the
-    # connected-components checkpoint, so pin the edges frame itself
-    # (the exact construction semantic_dedup runs)
-    cells = ivf_index(
-        emb.select("vec_id", "embedding"), 64, n_cells=16,
-        out="sem_cluster",
-    )
-    edges = _semantic_edges(cells, 0.95)
-    plan = edges._sc._jvm.PythonSQLUtils.explainString(
-        edges._jdf.queryExecution(), "simple"
+    if op == "semantic_dedup":
+        # the full operator's lazy plan hides the edge stage behind the
+        # connected-components checkpoint, so pin the edges frame itself
+        # (the exact construction semantic_dedup runs)
+        cells = ivf_index(
+            emb.select("vec_id", "embedding"), 64, n_cells=16,
+            out="sem_cluster",
+        )
+        kernel = _semantic_edges(cells, 0.95)
+        out = semantic_dedup(
+            emb.select("vec_id", "embedding"), dim=64, n_clusters=16
+        )
+    else:
+        kernel = out = knn_join(
+            emb.filter(F.col("vec_id") % 50 == 0),
+            emb.filter(F.col("vec_id") % 50 != 0),
+            k=5,
+        )
+    plan = kernel._sc._jvm.PythonSQLUtils.explainString(
+        kernel._jdf.queryExecution(), "simple"
     )
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert "CartesianProduct" not in plan, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
-    import re as _re
-
-    # ONE Exchange: the groupBy's hash partitioning on the cluster id
-    assert len(_re.findall(r"Exchange hashpartitioning", plan)) == 1, plan
+    assert "FlatMapGroupsInArrow" in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+    # ONE Exchange feeds the kernel: the groupBy's hash partitioning on
+    # the group key (the plan prints the kernel's subtree below it)
+    below = plan.split("FlatMapGroupsInArrow", 1)[1]
+    assert len(_re.findall(r"Exchange hashpartitioning", below)) == 1, plan
     # and the full operator still shows no accidental all-pairs join
-    out = semantic_dedup(
-        emb.select("vec_id", "embedding"), dim=64, n_clusters=16
-    )
     full = out._sc._jvm.PythonSQLUtils.explainString(
         out._jdf.queryExecution(), "simple"
     )

@@ -502,35 +502,76 @@ def test_pair_cosine_kernel_validates_dim_and_element_nulls():
     cosine in the block), enforced via the caller-declared dim, and
     (b) element-LEVEL nulls, which pass the top-level null_count check
     and would otherwise turn into NaN cosines that silently drop
-    pairs. Direct kernel-level tests — no Spark needed."""
+    pairs. Every input runs through both emit modes (threshold pairs
+    and local top-k), since every cosine operator shares the kernel.
+    Direct kernel-level tests — no Spark needed."""
     import pyarrow as pa
 
     from vinum_spark.operators.similarity import _pair_cosine_kernel
 
-    def tbl(vectors):
+    def tbl(vectors, ids=None):
         n = len(vectors)
         return pa.table(
             {
                 "__pa": pa.array([0] * n, "int32"),
                 "__pb": pa.array([0] * n, "int32"),
                 "__side": pa.array(["a"] * n),
-                "__id": pa.array(list(range(n)), "int64"),
+                "__id": pa.array(ids or list(range(n)), "int64"),
                 "__v": pa.array(vectors, pa.list_(pa.float64())),
             }
         )
 
+    pairs = _pair_cosine_kernel(0.9, 2)
+    topk = _pair_cosine_kernel(dim=2, k=1)
+
     # happy path: declared dim, exact duplicate pair found
-    good = _pair_cosine_kernel(0.9, 2)(tbl([[1.0, 0.0], [1.0, 0.0]]))
+    good = pairs(tbl([[1.0, 0.0], [1.0, 0.0]]))
     assert good.num_rows == 1 and good.column("cosine")[0].as_py() == 1.0
+    # top-k over a diagonal group: every row ranks all rows, itself too
+    best = topk(tbl([[1.0, 0.0], [0.0, 1.0]])).to_pydict()
+    assert sorted(zip(best["id_a"], best["id_b"])) == [(0, 0), (1, 1)]
+    assert best["cosine"] == [1.0, 1.0]
 
-    # offsetting ragged rows: 1 + 3 elements over 2 rows divides evenly
-    # by n — only the dim check can catch it
-    with pytest.raises(ValueError, match="ragged|dim"):
-        _pair_cosine_kernel(0.9, 2)(tbl([[1.0], [0.0, 1.0, 2.0]]))
+    # exact duplicates tie on the 6-dp score: the LOWER id wins
+    tie = topk(tbl([[0.6, 0.8], [0.6, 0.8], [1.0, 0.0]], ids=[9, 4, 7]))
+    tie = dict(zip(tie.column("id_a").to_pylist(), tie.column("id_b").to_pylist()))
+    assert tie == {9: 4, 4: 4, 7: 7}
 
-    # element-level null inside a list: top-level null_count is 0
-    with pytest.raises(ValueError, match="null element"):
-        _pair_cosine_kernel(0.9, 2)(tbl([[1.0, None], [1.0, 0.0]]))
+    for kernel in (pairs, topk):
+        # offsetting ragged rows: 1 + 3 elements over 2 rows divides
+        # evenly by n — only the dim check can catch it
+        with pytest.raises(ValueError, match="ragged|dim"):
+            kernel(tbl([[1.0], [0.0, 1.0, 2.0]]))
+
+        # element-level null inside a list: top-level null_count is 0
+        with pytest.raises(ValueError, match="null element"):
+            kernel(tbl([[1.0, None], [1.0, 0.0]]))
+
+
+@pytest.mark.parametrize(
+    "queries, corpus",
+    [
+        # null element in a query vector: used to rank NULL cosines
+        ([(0, [1.0, None])], [(1, [1.0, 0.1]), (2, [0.5, 1.0])]),
+        # null element in a corpus vector: used to outrank a valid row
+        ([(0, [1.0, 0.0])], [(1, [1.0, None]), (2, [0.5, 1.0])]),
+        # 2-d query against a mostly 3-d corpus: used to return nothing
+        ([(0, [1.0, 0.0])], [(1, [1.0, 0.0, 0.0]), (2, [0.5, 1.0, 0.0]), (3, [1.0, 0.1])]),
+    ],
+    ids=["query-null-element", "corpus-null-element", "mixed-dimension"],
+)
+def test_knn_join_malformed_vectors_raise(spark, queries, corpus):
+    """knn_join runs the shared Gram kernel, so a malformed vector
+    fails loudly instead of returning NULL-cosine, misranked or
+    missing rows."""
+    from vinum_spark.operators.similarity import knn_join
+
+    schema = "vec_id long, embedding array<double>"
+    q = spark.createDataFrame(queries, schema)
+    c = spark.createDataFrame(corpus, schema)
+    with pytest.raises(Exception, match="ValueError") as err:
+        knn_join(q, c, k=2, n_blocks=1).collect()
+    assert "null element" in str(err.value) or "dimension" in str(err.value)
 
 
 def test_env_bool_normalizes_and_rejects(monkeypatch):

@@ -1414,8 +1414,9 @@ def q38(spark, sf_dir):
     "77-degree angle (this corpus has no true near-dups; max pair cosine "
     "is 0.51), where no LSH family can prune without losing recall — "
     "for real near-dup thresholds (cos >= 0.7) the scale path is "
-    "lsh_candidate_pairs + cosine_verify, tested on planted near-dups "
-    "in tests/test_operators.py.",
+    "lsh_blocked_cosine_pairs (q56/q83/q85). Each block pair runs the "
+    "shared Arrow Gram kernel (applyInArrow) that every cosine "
+    "operator uses.",
 )
 def q39(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
@@ -2118,13 +2119,14 @@ def q55(spark, sf_dir):
     ORDER BY id_a, id_b
     """,
     "Embedding near-dup scale path under the oracle gate: "
+    "lsh_blocked_cosine_pairs, the LSH candidates of "
     "lsh_candidate_pairs (126 hyperplanes as two signature columns, "
     "8-bit bands — map-side signature, pair enumeration only within a "
     "band bucket; vs the old 32-plane/4-bit form the 14 narrower bands "
     "keep the same ~4e-5 pair-miss rate with 16x more buckets per "
     "band, ~10x fewer junk collisions, measured 1.7x faster at "
-    "sf0.01) + "
-    "cosine_verify (exact codegen'd dot per candidate) over the corpus "
+    "sf0.01) verified exactly inside the shared Arrow Gram kernel, "
+    "one group per bucket block pair, over the corpus "
     "unioned with planted near-dups (last 4 of 64 components zeroed, "
     "cosine ~0.97). The oracle computes ALL pairs >= 0.9 exactly, so "
     "any pair LSH misses hash-mismatches: measured recall 1.0 at "
@@ -2156,7 +2158,8 @@ def q56(spark, sf_dir):
     # materializing through a distinct Exchange and two verify joins.
     # Candidate set identical by construction (shared bucket helper);
     # the round-4 cosine output was verified EXACTLY equal (not just
-    # allclose) to the expression-path output at sf0.001/0.01/0.1.
+    # allclose) to the expression-path output at sf0.001/0.01/0.1, and
+    # still is on the shared Gram kernel.
     verified = S.lsh_blocked_cosine_pairs(
         allv, dim=64, threshold=0.9, n_planes=126, band_bits=8
     )
@@ -3272,7 +3275,8 @@ def q77(spark, sf_dir):
     "slice) — the retrieval-augmentation shape, where the query side "
     "is a table, not a literal. Corpus hashed into blocks once, "
     "queries replicated per block, one BLAS matmul + LOCAL top-k per "
-    "(query-block, corpus-block) bucket, then a bounded global re-rank "
+    "(query-block, corpus-block) bucket (the shared Arrow Gram "
+    "kernel's top-k mode), then a bounded global re-rank "
     "over |Q| x n_blocks x k candidates — never |Q| x |C| rows, no "
     "broadcast of either table, no cartesian (CI plan guards run on "
     "this query like every other). Oracle computes the exact "
@@ -5908,7 +5912,8 @@ def _q110_oracle() -> str:
     "semantic_dedup): cluster-bounded embedding near-dup, the "
     "100 TB-scale answer to all-pairs cosine. ivf_index's "
     "deterministic coarse quantizer assigns clusters, within-cluster "
-    "pairs >= 0.95 cosine become edges (codegen'd JVM dot, no UDF), "
+    "pairs >= 0.95 cosine become edges (the shared Arrow Gram kernel, "
+    "one diagonal group per cluster), "
     "connected components (q63 machinery) label duplicate groups, "
     "min-id survives. Gate plants q56-style twins (last 4 of 64 "
     "components zeroed, cosine ~0.97) — each twin must land in its "

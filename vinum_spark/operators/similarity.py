@@ -280,167 +280,206 @@ def blocked_pair_cosine(
 
     Each vector is hashed to one of ``n_blocks`` blocks; every unordered
     block pair (p ≤ q) becomes one join bucket, side A holding block p's
-    rows and side B block q's. The join is an EQUI-join on the
-    (block_a, block_b) key: no broadcast of the full table, no
-    BroadcastNestedLoopJoin, no cartesian product. Work per task is
-    (n/n_blocks)² pair evaluations — even by construction (blocks are
-    hash-assigned), so 1000 executors each get ~pairs/tasks work.
-    Replication cost: each row is shuffled ~n_blocks times; pick
+    rows and side B block q's (:func:`_block_pair_grid`). The join is an
+    EQUI-join on the (block_a, block_b) key: no broadcast of the full
+    table, no BroadcastNestedLoopJoin, no cartesian product. Work per
+    task is (n/n_blocks)² pair evaluations — even by construction
+    (blocks are hash-assigned), so 1000 executors each get ~pairs/tasks
+    work. Replication cost: each row is shuffled n_blocks times; pick
     n_blocks ≈ sqrt(desired tasks).
 
     Exact all-pairs is inherently O(n²) COMPUTE — that is the query's
     semantics. This operator makes the compute distribute evenly and the
     memory bounded (a task materializes two blocks, not the table). When
     the threshold is high enough for hyperplane LSH to prune (cos ≳ 0.7,
-    i.e. angle ≲ 45°), prefer :func:`lsh_candidate_pairs` +
-    :func:`cosine_verify`, which replaces the grid with bucket-local
-    pairs. At weak thresholds (e.g. 0.22 ≈ 77° — near-orthogonal) no LSH
-    family can prune without losing recall, and this blocked exact plan
-    is the right one.
+    i.e. angle ≲ 45°), prefer :func:`lsh_blocked_cosine_pairs`, which
+    applies the same grid within LSH buckets. At weak thresholds (e.g.
+    0.22 ≈ 77° — near-orthogonal) no LSH family can prune without
+    losing recall, and this blocked exact plan is the right one.
 
-    The per-bucket kernel is an Arrow-batched ``applyInPandas`` matmul:
-    a dense O(n²) dot-product sweep is BLAS territory — one
-    ``A @ B.T`` per block pair replaces millions of per-pair expression
-    evaluations, and only pairs ≥ threshold ever materialize as rows
-    (measured ~10× faster than enumerating the pairs as a JVM join at
-    sf0.1; the join shape also shuffles every PAIR, this shape shuffles
-    every ROW ×n_blocks). This is the documented carve-out where built-in
-    expressions genuinely can't express the computation efficiently.
-
-    Round-18: the kernel moved from ``applyInPandas`` to ``applyInArrow``
-    — the embedding column arrives as an Arrow list array whose values
-    buffer reshapes zero-copy into the (n, dim) BLAS operand, replacing
-    the per-row ``np.stack`` over a pandas object column (one Python
-    object + small ndarray per row). Same float ops in the same order —
-    results bit-identical; measured 579 → 476 ms on the q39 bench query
-    at sf0.1, with the win growing with rows-per-block since the removed
-    cost was per-row.
+    Each bucket runs the shared Arrow Gram kernel
+    (:func:`_pair_cosine_kernel`, ``applyInArrow``): a dense O(n²)
+    dot-product sweep is BLAS territory — one Gram matmul per block pair
+    replaces millions of per-pair expression evaluations, and only pairs
+    ≥ threshold ever materialize as rows (measured ~10× faster than
+    enumerating the pairs as a JVM join at sf0.1; the join shape also
+    shuffles every PAIR, this shape shuffles every ROW ×n_blocks). This
+    is the documented carve-out where built-in expressions genuinely
+    can't express the computation efficiently. Vectors must be non-null
+    and of one length; the kernel raises ``ValueError`` otherwise.
     """
-    v = F.col(vec_col)
     base = df.select(
         F.col(id_col).cast("long").alias("__id"),
-        v.cast("array<double>").alias("__v"),
+        F.col(vec_col).cast("array<double>").alias("__v"),
     ).withColumn(
         "__blk", F.pmod(F.xxhash64(F.col("__id")), F.lit(n_blocks)).cast("int")
     )
-    # A row in block b joins bucket (pa=b, pb=q) as side A for q ≥ b and
-    # bucket (pa=p, pb=b) as side B for p < b: every unordered block pair
-    # meets in exactly one bucket, the diagonal bucket holds each row once.
-    a_copies = base.select(
-        "__id",
-        "__v",
-        F.col("__blk").alias("__pa"),
-        F.explode(F.sequence(F.col("__blk"), F.lit(n_blocks - 1))).alias("__pb"),
-        F.lit("a").alias("__side"),
-    )
-    b_copies = base.filter(F.col("__blk") > 0).select(
-        "__id",
-        "__v",
-        F.explode(F.sequence(F.lit(0), F.col("__blk") - 1)).alias("__pa"),
-        F.col("__blk").alias("__pb"),
-        F.lit("b").alias("__side"),
-    )
-    replicated = a_copies.unionByName(b_copies)
+    replicated = _block_pair_grid(base, F.lit(n_blocks), "__id", "__v")
     return replicated.groupBy("__pa", "__pb").applyInArrow(
-        _pair_cosine_kernel(threshold), schema="id_a long, id_b long, cosine double"
+        _pair_cosine_kernel(threshold), schema=_PAIR_SCHEMA
     )
 
 
-def _pair_cosine_kernel(threshold: float, dim: int | None = None):
-    """The block-pair cosine Arrow kernel shared by
-    :func:`blocked_pair_cosine` and :func:`lsh_blocked_cosine_pairs`:
-    one group = one block pair (side-``a`` rows × side-``b`` rows; a
-    diagonal block — ``__pa == __pb`` — holds each row once and
-    enumerates its upper triangle). One BLAS matmul per group replaces
-    per-pair expression evaluation; only pairs ≥ ``threshold`` ever
-    materialize as rows, as ``(id_a, id_b, cosine)`` with
-    ``id_a < id_b``. When the caller knows ``dim`` it is enforced
-    exactly (``len(values) == n_rows × dim``); without it the kernel
-    can only check divisibility, which misses offsetting errors (one
-    row short + one row long)."""
-    thr = float(threshold)
+def _block_pair_grid(frame: DataFrame, nb: Column, *keep: str) -> DataFrame:
+    """The block-pair grid replication, built ONE way for every grid
+    operator: a row in block ``__blk`` (of ``nb`` blocks) is copied once
+    per block j, as side ``a`` of group ``(__blk, j)`` for j ≥ ``__blk``
+    and as side ``b`` of group ``(j, __blk)`` for j < ``__blk``. Every
+    unordered block pair meets in exactly one ``(__pa, __pb)`` group,
+    and the diagonal group holds each row once. ONE explode emits every
+    copy — a union of two projections would compute the input subtree
+    twice per action (a broadcast branch has no exchange to reuse).
+    Returns ``keep`` plus ``__pa``, ``__pb``, ``__side``."""
+    blk = F.col("__blk")
+    copies = F.transform(
+        F.sequence(F.lit(0), nb - 1),
+        lambda j: F.struct(
+            F.least(blk, j).alias("__pa"),
+            F.greatest(blk, j).alias("__pb"),
+            F.when(j >= blk, F.lit("a")).otherwise(F.lit("b")).alias("__side"),
+        ),
+    )
+    return frame.select(*keep, F.explode(copies).alias("__bp")).select(
+        *keep, "__bp.*"
+    )
+
+
+#: Left rows per Gram block. Every kernel mode walks a group's left side
+#: this many rows at a time, so one group holds at most
+#: ``_GRAM_BLOCK × |right side|`` cosines at once, whatever its size.
+_GRAM_BLOCK = 4096
+
+#: The one output schema of :func:`_pair_cosine_kernel`, in every mode.
+_PAIR_SCHEMA = "id_a long, id_b long, cosine double"
+
+
+def _pair_cosine_kernel(
+    threshold: Optional[float] = None,
+    dim: Optional[int] = None,
+    k: Optional[int] = None,
+):
+    """The Arrow Gram kernel behind every cosine operator
+    (:func:`blocked_pair_cosine`, :func:`lsh_blocked_cosine_pairs`,
+    :func:`knn_join`, :func:`semantic_dedup`), applied per group with
+    ``applyInArrow``. A group is one block pair: rows with ``__side``
+    ``a`` are the left side, ``b`` the right side; a diagonal group
+    (``__pa == __pb``) holds each row once, on both sides.
+
+    Rows are unit-normalized once, then the left side is multiplied
+    against the right side ``_GRAM_BLOCK`` rows at a time. Exactly one
+    emit mode is chosen:
+
+    - ``threshold``: every pair with cosine ≥ ``threshold``, once per
+      unordered pair, as ``(id_a, id_b, cosine)`` with ``id_a < id_b``
+      (a diagonal group emits its upper triangle);
+    - ``k``: per left row, its ``k`` best right rows, ranked by the
+      cosine rounded to 6 dp (descending) with the lower right id
+      first — :func:`cosine_topk`'s contract, so this local prune never
+      drops a global winner. Emitted as ``(id_a=left id, id_b=right id,
+      cosine)`` with the raw cosine; a diagonal group ranks every row
+      against all rows, itself included.
+
+    A zero-norm vector has no direction: its cosines are NaN and it
+    matches nothing in either mode.
+
+    Raises ``ValueError`` on a null vector, a null element, or rows of
+    unequal length (or of a length other than ``dim`` when the caller
+    knows it). A null or ragged row shifts every later row's window in
+    the flat values buffer, and a null element would become a NaN that
+    silently drops pairs, so neither is tolerated. Operators that
+    exclude NULL vectors do so before the kernel, where they document
+    it."""
+    if (threshold is None) == (k is None):
+        raise ValueError("pass exactly one of threshold and k")
     want_dim = int(dim) if dim else None
 
     def _kernel(tbl):
         import numpy as np
         import pyarrow as pa
+        import pyarrow.compute as pc
 
-        empty = pa.table(
-            {
-                "id_a": pa.array([], "int64"),
-                "id_b": pa.array([], "int64"),
-                "cosine": pa.array([], "float64"),
-            }
-        )
         n = tbl.num_rows
-        if n == 0:
-            return empty
-        pa_col = tbl.column("__pa").to_numpy(zero_copy_only=False)
-        pb_col = tbl.column("__pb").to_numpy(zero_copy_only=False)
-        side = tbl.column("__side").to_numpy(zero_copy_only=False)
-        ids = tbl.column("__id").to_numpy(zero_copy_only=False)
         vcol = tbl.column("__v")
         if isinstance(vcol, pa.ChunkedArray):
             vcol = vcol.combine_chunks()
-        # list array -> contiguous values buffer -> (n, dim) view.
-        # flatten() (not .values) so a sliced/offset array reads the
-        # right window; fixed dim is the operator's documented contract
-        # — and it is VALIDATED here (round-19 ADVICE): a null or
-        # ragged embedding shifts every subsequent row's window, and
-        # when the truncated length happens to divide evenly the
-        # reshape would silently misalign all downstream cosines.
         if vcol.null_count:
             raise ValueError(
-                "blocked pair cosine requires non-null fixed-dimension "
+                "pair cosine requires non-null fixed-dimension "
                 f"vectors; got {vcol.null_count} null(s) in a batch"
             )
-        flat_arr = vcol.flatten()
-        # element-level nulls survive the top-level check and would
-        # otherwise convert to NaN silently, poisoning every cosine in
-        # the block with a NaN that drops pairs instead of raising
-        if flat_arr.null_count:
+        # flatten() (not .values) so a sliced/offset array reads the
+        # right window
+        flat = vcol.flatten()
+        if flat.null_count:
             raise ValueError(
-                "blocked pair cosine requires non-null vector elements; "
-                f"got {flat_arr.null_count} null element(s) in a batch"
+                "pair cosine requires non-null vector elements; "
+                f"got {flat.null_count} null element(s) in a batch"
             )
-        flat = np.asarray(flat_arr)
-        # per-ROW length check (not just the total): offsetting ragged
-        # rows (one short + one long) keep the total divisible — and
-        # even equal to n*dim — while every row after the first bad one
-        # reads a shifted window
-        lens = pa.compute.list_value_length(vcol)
-        lo_hi = pa.compute.min_max(lens)
-        lo, hi = lo_hi["min"].as_py(), lo_hi["max"].as_py()
+        # per-ROW lengths, not just the total: offsetting ragged rows
+        # (one short + one long) keep the total equal to n*dim
+        lens = pc.min_max(pc.list_value_length(vcol))
+        lo, hi = lens["min"].as_py(), lens["max"].as_py()
         if lo != hi or (want_dim is not None and hi != want_dim):
             raise ValueError(
-                "blocked pair cosine requires fixed "
+                "pair cosine requires fixed "
                 f"{want_dim if want_dim is not None else 'same'}"
                 f"-dimension vectors; got row lengths in [{lo}, {hi}] "
                 f"over {n} rows (ragged or wrong-dim input)"
             )
-        row_dim = want_dim if want_dim is not None else len(flat) // n
-        vecs = flat.reshape(n, row_dim)
-        diagonal = pa_col[0] == pb_col[0]
-        amask = np.ones(n, bool) if diagonal else side == "a"
-        bmask = np.ones(n, bool) if diagonal else side == "b"
-        va, vb = vecs[amask], vecs[bmask]
-        ids_a, ids_b = ids[amask], ids[bmask]
-        if len(va) == 0 or len(vb) == 0:
-            return empty
-        sims = (va @ vb.T) / np.outer(
-            np.linalg.norm(va, axis=1), np.linalg.norm(vb, axis=1)
-        )
-        if diagonal:
-            ii, jj = np.nonzero(np.triu(sims >= thr, k=1))
-        else:
-            ii, jj = np.nonzero(sims >= thr)
-        lo = np.minimum(ids_a[ii], ids_b[jj])
-        hi = np.maximum(ids_a[ii], ids_b[jj])
+        vecs = flat.to_numpy(zero_copy_only=False).astype("float64", copy=False)
+        ids = tbl.column("__id").to_numpy().astype("int64", copy=False)
+        with np.errstate(invalid="ignore", divide="ignore"):
+            unit = vecs.reshape(n, hi)
+            unit = unit / np.linalg.norm(unit, axis=1, keepdims=True)
+        diagonal = tbl["__pa"][0].as_py() == tbl["__pb"][0].as_py()
+        side = tbl.column("__side").to_numpy(zero_copy_only=False)
+        left = np.ones(n, bool) if diagonal else side == "a"
+        right = np.ones(n, bool) if diagonal else side == "b"
+        ul, ur = unit[left], unit[right]
+        ids_l, ids_r = ids[left], ids[right]
+        if k is not None:
+            kk = min(k, len(ids_r))
+            # id tiebreak by RANK within the group (only relative order
+            # matters): it stays below 2**40, so 64-bit ids can neither
+            # bleed into the cosine bits nor overflow the key
+            rank_r = np.empty(len(ids_r), dtype="int64")
+            rank_r[np.argsort(ids_r, kind="stable")] = np.arange(len(ids_r))
+        out_a, out_b, out_c = [], [], []
+        for i0 in range(0, len(ids_l) if len(ids_r) else 0, _GRAM_BLOCK):
+            sims = ul[i0 : i0 + _GRAM_BLOCK] @ ur.T
+            if k is None:
+                ii, jj = np.nonzero(sims >= threshold)
+                if diagonal:
+                    keep = jj > ii + i0
+                    ii, jj = ii[keep], jj[keep]
+                a, b = ids_l[ii + i0], ids_r[jj]
+                out_a.append(np.minimum(a, b))
+                out_b.append(np.maximum(a, b))
+                out_c.append(sims[ii, jj])
+            else:
+                # integer key: the 6-dp score, then the lower id.
+                # np.rint, not a bare cast, which truncates toward zero
+                # and would merge adjacent 6-dp scores that F.round
+                # ranks apart. NaN (a zero-norm row) sorts last and is
+                # never emitted
+                with np.errstate(invalid="ignore"):
+                    key = np.rint(sims * 1e6).astype("int64") * (1 << 40) - rank_r
+                key[np.isnan(sims)] = np.iinfo("int64").min
+                idx = np.argpartition(key, -kk, axis=1)[:, -kk:]
+                cos = np.take_along_axis(sims, idx, axis=1).ravel()
+                hit = ~np.isnan(cos)
+                out_a.append(np.repeat(ids_l[i0 : i0 + _GRAM_BLOCK], kk)[hit])
+                out_b.append(ids_r[idx.ravel()][hit])
+                out_c.append(cos[hit])
+
+        def col(parts, dtype):
+            return pa.array(np.concatenate(parts) if parts else [], dtype)
+
         return pa.table(
             {
-                "id_a": pa.array(lo, "int64"),
-                "id_b": pa.array(hi, "int64"),
-                "cosine": pa.array(sims[ii, jj], "float64"),
+                "id_a": col(out_a, "int64"),
+                "id_b": col(out_b, "int64"),
+                "cosine": col(out_c, "float64"),
             }
         )
 
@@ -515,7 +554,6 @@ def lsh_candidate_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     seed: int = 42,
-    checkpoint_buckets: bool = False,
 ) -> DataFrame:
     """Candidate near-dup pairs from hyperplane-LSH band co-membership —
     the embedding analogue of ``minhash_candidate_pairs``.
@@ -527,6 +565,9 @@ def lsh_candidate_pairs(
     cosine thresholds (small angles) — use with
     :func:`cosine_verify` for near-dup detection (cos ≳ 0.7); for weak
     thresholds use :func:`blocked_pair_cosine` (see its docstring).
+    :func:`lsh_blocked_cosine_pairs` fuses the two steps and is the
+    faster near-dup path; this pair plus :func:`cosine_verify` stays as
+    its JVM-fold reference.
 
     ``n_planes`` may exceed one long's 63-bit capacity: the planes are
     split across ``ceil(n_planes/63)`` independent signature columns
@@ -544,26 +585,6 @@ def lsh_candidate_pairs(
     bucket = _lsh_bucket_frame(
         df, dim, n_planes, band_bits, vec_col, id_col, seed
     )
-    if checkpoint_buckets:
-        # The self-join below usually plans as a broadcast join whose
-        # build and stream sides are the SAME subtree, and a broadcast
-        # has no exchange to reuse — the signature pipeline (n_planes
-        # dot products per row) computes twice. A lazy localCheckpoint
-        # of the (id, band, key) frame cuts that in half. Opt-in, not
-        # default: worthwhile only when the signatures are the
-        # expensive part (q56's 126 planes over a raw parquet scan:
-        # measured ~0.4 s of 4.0 s at sf0.1); when the input is
-        # already a checkpointed feature frame with few planes
-        # (q83/q85: 32 planes over a persisted id+64-float RDD) the
-        # persistence overhead measured LARGER than the saved
-        # recompute (+5-9% end-to-end). NOT a shuffle-join hint:
-        # ReuseExchange would also dedup the pipeline, but hashing on
-        # (band, key) concentrates each bucket's quadratic pair
-        # enumeration onto one task — with band_bits=4 (16 keys/band)
-        # that serialized q83/q85's verify stage (measured
-        # 6.2 s -> 15.3 s) — while the broadcast join streams
-        # enumeration evenly over the upstream partitioning.
-        bucket = bucket.localCheckpoint(eager=False)
     a, b = bucket.alias("a"), bucket.alias("b")
     return (
         a.join(
@@ -657,7 +678,8 @@ def lsh_blocked_cosine_pairs(
     — ``max`` is deterministic where ``distinct`` would not be).
 
     Exactness note: the verify decision is the same float contract as
-    :func:`blocked_pair_cosine` (float64 BLAS dot / norm product).
+    :func:`blocked_pair_cosine` (one shared kernel: float64 BLAS dot of
+    unit-normalized vectors).
     Versus ``cosine_verify``'s JVM fold it can differ at the last ulp,
     which matters only for pairs razor-thin at ``threshold`` or at a
     rounding boundary of a rounded declared output. Callers that only
@@ -667,8 +689,9 @@ def lsh_blocked_cosine_pairs(
     equality — q56 (declares ``round(cosine, 4)``) was switched only
     after its round-4 output was verified EXACTLY equal to the
     expression path's at sf0.001/0.01/0.1 (the fixed deterministic
-    harness corpora); a caller needing bit-identity to the JVM fold on
-    arbitrary data should stay on :func:`cosine_verify`.
+    harness corpora), and it is still exactly equal on the shared
+    kernel's unit-vector arithmetic; a caller needing bit-identity to
+    the JVM fold on arbitrary data should stay on :func:`cosine_verify`.
 
     100 TB shape: signatures and banding are map-side; the groupBy
     Exchange shuffles each row ``n_bands × nb`` times carrying
@@ -708,46 +731,11 @@ def lsh_blocked_cosine_pairs(
             F.pmod(F.xxhash64(F.col("__id")), F.col("__nb")).cast("int"),
         )
     )
-    # block-grid replication within each bucket (see blocked_pair_cosine:
-    # every unordered block pair meets in exactly one group, the diagonal
-    # group holds each row once). ONE explode emits both sides' copies —
-    # a union of two projections would compute the signature+join
-    # subtree twice per action (a broadcast branch has no exchange to
-    # reuse), measured as most of the fused stage's residual.
-    blk, nb = F.col("__blk"), F.col("__nb")
-    a_structs = F.transform(
-        F.sequence(blk, nb - 1),
-        lambda j: F.struct(
-            blk.alias("__pa"),
-            j.cast("int").alias("__pb"),
-            F.lit("a").alias("__side"),
-        ),
-    )
-    b_structs = F.when(
-        blk > 0,
-        F.transform(
-            F.sequence(F.lit(0), blk - 1),
-            lambda i: F.struct(
-                i.cast("int").alias("__pa"),
-                blk.alias("__pb"),
-                F.lit("b").alias("__side"),
-            ),
-        ),
-    ).otherwise(
-        F.array().cast("array<struct<__pa:int,__pb:int,__side:string>>")
-    )
-    replicated = bucketed.select(
-        "__id",
-        "__v",
-        "band",
-        "key",
-        F.explode(F.concat(a_structs, b_structs)).alias("__bp"),
-    ).select(
-        "__id", "__v", "band", "key", "__bp.__pa", "__bp.__pb", "__bp.__side"
+    replicated = _block_pair_grid(
+        bucketed, F.col("__nb"), "__id", "__v", "band", "key"
     )
     hits = replicated.groupBy("band", "key", "__pa", "__pb").applyInArrow(
-        _pair_cosine_kernel(threshold, dim),
-        schema="id_a long, id_b long, cosine double",
+        _pair_cosine_kernel(threshold, dim), schema=_PAIR_SCHEMA
     )
     return hits.groupBy("id_a", "id_b").agg(F.max("cosine").alias("cosine"))
 
@@ -989,23 +977,27 @@ def knn_join(
     Ranking follows :func:`cosine_topk`'s contract exactly: cosine
     rounded to 6 decimals desc, corpus id tiebreak — deterministic
     across partitionings and engines (ulp-level BLAS differences and
-    exact-duplicate corpus vectors cannot flip ranks).
+    exact-duplicate corpus vectors cannot flip ranks). The reported
+    cosine is the raw value rounded once, to 4 decimals.
 
     Scale shape: corpus rows are hashed into ``n_blocks`` blocks ONCE
     (the big side never replicates); each query row is replicated to
     every block (n_blocks × query bytes — queries are the smaller side
     by assumption; flip the arguments if not). Each block bucket holds
-    all queries + |C|/n_blocks corpus rows, computes one BLAS matmul,
-    and emits only its LOCAL top-k per query, so the global re-rank
+    all queries + |C|/n_blocks corpus rows and runs the shared Arrow
+    Gram kernel (:func:`_pair_cosine_kernel`) in its top-k mode, which
+    emits only the LOCAL top-k per query, so the global re-rank
     shuffles ``|Q| × n_blocks × k`` candidate rows — bounded, never
     |Q|×|C|. Pick ``n_blocks`` ≈ cluster cores (it is also the
     parallelism). No broadcast of either table, no
-    BroadcastNestedLoopJoin, no cartesian. Wrong-length vectors are
-    dropped inside the kernel (never crash the batch), matching the
-    LSH/IVF/PQ null contracts.
-    """
-    import pandas as pd
+    BroadcastNestedLoopJoin, no cartesian.
 
+    NULL vectors are filtered out on both sides before the kernel. A
+    vector with a null element, or vectors of different lengths, raise
+    ``ValueError`` from the kernel: there is no right answer to rank
+    them by, and dropping them would return short or empty rankings.
+    A zero-norm vector matches nothing.
+    """
     if k < 1 or n_blocks < 1:
         raise ValueError(f"k and n_blocks must be >= 1, got k={k} n_blocks={n_blocks}")
     # the long cast below is lossless only for integral id columns; a
@@ -1020,76 +1012,48 @@ def knn_join(
                 f"knn_join: {side}.{id_col} must be an integral type for the "
                 f"deterministic id tiebreak, got {dt.simpleString()}"
             )
-    q_side = (
-        queries.select(
+
+    def vectors(frame: DataFrame) -> DataFrame:
+        return frame.select(
             F.col(id_col).cast("long").alias("__id"),
             F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-        .filter(F.col("__v").isNotNull())
-        .withColumn("__cblk", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
-        .withColumn("__is_q", F.lit(1))
+        ).filter(F.col("__v").isNotNull())
+
+    # the queries are the one left block, numbered -1 so that no group
+    # is a diagonal; corpus block b is right block b
+    q_side = vectors(queries).select(
+        "__id",
+        "__v",
+        F.lit(-1).alias("__pa"),
+        F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))).alias("__pb"),
+        F.lit("a").alias("__side"),
     )
-    c_side = (
-        corpus.select(
-            F.col(id_col).cast("long").alias("__id"),
-            F.col(vec_col).cast("array<double>").alias("__v"),
-        )
-        .filter(F.col("__v").isNotNull())
-        .withColumn(
-            "__cblk", F.pmod(F.xxhash64(F.col("__id")), F.lit(n_blocks)).cast("int")
-        )
-        .withColumn("__is_q", F.lit(0))
+    c_side = vectors(corpus).select(
+        "__id",
+        "__v",
+        F.lit(-1).alias("__pa"),
+        F.pmod(F.xxhash64(F.col("__id")), F.lit(n_blocks)).cast("int").alias("__pb"),
+        F.lit("b").alias("__side"),
     )
-    tagged = q_side.unionByName(c_side)
-
-    out_schema = "query_id long, vec_id long, cosine double"
-
-    def _bucket_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        lens = pdf["__v"].map(len)
-        dim = int(lens.mode().iloc[0]) if len(lens) else 0
-        pdf = pdf[lens == dim]  # drop wrong-length rows, don't crash
-        qs = pdf[pdf["__is_q"] == 1]
-        cs = pdf[pdf["__is_q"] == 0]
-        if qs.empty or cs.empty:
-            return pd.DataFrame({"query_id": [], "vec_id": [], "cosine": []})
-        qm = np.stack([np.asarray(v, dtype="float64") for v in qs["__v"]])
-        cm = np.stack([np.asarray(v, dtype="float64") for v in cs["__v"]])
-        qn = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-        cn = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-        sims = qn @ cn.T  # |q| x |c| raw cosines (output rounds these ONCE)
-        ids = cs["__id"].to_numpy()
-        # integer sort key over the 6dp-rounded cosine (cosine_topk's
-        # ranking contract) with id tiebreak, so local pruning can never
-        # drop the id-tiebroken winner. np.rint before the cast: a bare
-        # astype truncates toward zero, and ~1% of x*1e6 products land
-        # at k.999... in binary, which would collapse adjacent 6dp keys
-        # that F.round (half-up) ranks apart. The tiebreak uses the ids'
-        # RANK within the block (only relative order matters), which is
-        # < block size, so arbitrary 64-bit ids can't bleed into the
-        # cosine bits or overflow the combined key.
-        id_rank = np.empty(len(ids), dtype="int64")
-        id_rank[np.argsort(ids, kind="stable")] = np.arange(len(ids))
-        key = (
-            np.rint(np.round(sims, 6) * 1e6).astype("int64") * (1 << 40)
-            - id_rank[None, :]
-        )
-        kk = min(k, key.shape[1])
-        idx = np.argpartition(-key, kk - 1, axis=1)[:, :kk]
-        rows_q = np.repeat(qs["__id"].to_numpy(), kk)
-        rows_c = ids[idx.ravel()]
-        rows_s = np.take_along_axis(sims, idx, axis=1).ravel()
-        return pd.DataFrame({"query_id": rows_q, "vec_id": rows_c, "cosine": rows_s})
-
-    local = tagged.groupBy("__cblk").applyInPandas(_bucket_topk, out_schema)
+    local = (
+        q_side.unionByName(c_side)
+        .groupBy("__pa", "__pb")
+        .applyInArrow(_pair_cosine_kernel(k=k), schema=_PAIR_SCHEMA)
+    )
     # rank on the 6dp key; the DISPLAYED cosine rounds the raw value
     # once (ranking on 6dp then re-rounding to 4dp would double-round)
-    w = Window.partitionBy("query_id").orderBy(
-        F.round("cosine", 6).desc(), F.col("vec_id").asc()
+    w = Window.partitionBy("id_a").orderBy(
+        F.round("cosine", 6).desc(), F.col("id_b").asc()
     )
     return (
         local.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", F.round("cosine", 4).alias("cosine"))
+        .select(
+            F.col("id_a").alias("query_id"),
+            "rank",
+            F.col("id_b").alias("vec_id"),
+            F.round("cosine", 4).alias("cosine"),
+        )
     )
 
 
@@ -1308,68 +1272,25 @@ def _semantic_edges(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Within-cluster cosine edges for :func:`semantic_dedup` — a
-    per-cluster BLAS Gram kernel (``applyInPandas`` grouped on
-    ``sem_cluster``): ONE hash Exchange on the cluster id, then each
-    cluster normalizes its rows once and matmuls itself in row blocks
-    of 4096 (memory ≤ block × |cluster| doubles). NULL-cluster rows
-    (NULL / wrong-length vectors) are excluded up front; zero-norm
-    rows never match — the NaN-comparison exclusion of the retired
-    pair-expression kernel, preserved exactly. Returns ``(id_a,
+    """Within-cluster cosine edges for :func:`semantic_dedup`: every
+    non-NULL cluster is one diagonal group of the shared Arrow Gram
+    kernel (:func:`_pair_cosine_kernel`) — ONE hash Exchange on the
+    cluster id. NULL-cluster rows (NULL / wrong-length vectors) are
+    excluded up front; zero-norm rows match nothing. Returns ``(id_a,
     id_b)`` with ``id_a < id_b``."""
-    import pandas as pd
-
-    thr = float(threshold)
-    blk = 4096
-
-    def _cluster_edges(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["__id"].to_numpy()
-        order = np.argsort(ids)
-        ids = ids[order]
-        mat = np.stack(
-            [
-                np.asarray(v, dtype="float64")
-                for v in pdf["__v"].to_numpy()[order]
-            ]
-        )
-        nrm = np.linalg.norm(mat, axis=1)
-        ok = nrm > 0
-        matn = np.zeros_like(mat)
-        matn[ok] = mat[ok] / nrm[ok, None]
-        out_a, out_b = [], []
-        n = len(ids)
-        for i0 in range(0, n, blk):
-            g = matn[i0 : min(i0 + blk, n)] @ matn.T
-            ii, jj = np.nonzero(g >= thr)
-            gi = ii + i0
-            # upper triangle in sorted-id order -> id_a < id_b
-            keep = (jj > gi) & ok[gi] & ok[jj]
-            out_a.append(ids[gi[keep]])
-            out_b.append(ids[jj[keep]])
-        return pd.DataFrame(
-            {
-                "id_a": (
-                    np.concatenate(out_a)
-                    if out_a
-                    else np.array([], dtype="int64")
-                ),
-                "id_b": (
-                    np.concatenate(out_b)
-                    if out_b
-                    else np.array([], dtype="int64")
-                ),
-            }
-        )
-
+    cluster = F.col("sem_cluster")
     return (
-        cells.filter(F.col("sem_cluster").isNotNull())
+        cells.filter(cluster.isNotNull())
         .select(
             F.col(id_col).alias("__id"),
-            F.col("sem_cluster").alias("__c"),
             F.col(vec_col).alias("__v"),
+            cluster.alias("__pa"),
+            cluster.alias("__pb"),
+            F.lit("a").alias("__side"),
         )
-        .groupBy("__c")
-        .applyInPandas(_cluster_edges, "id_a long, id_b long")
+        .groupBy("__pa", "__pb")
+        .applyInArrow(_pair_cosine_kernel(threshold), schema=_PAIR_SCHEMA)
+        .select("id_a", "id_b")
     )
 
 
@@ -1399,8 +1320,9 @@ def semantic_dedup(
        fixed-centroid argmax (the coarse quantizer the ANN gates
        q46/q79 pin; a production run trains k-means centroids first —
        the assignment path is identical);
-    2. within-cluster pairwise cosine as a per-cluster BLAS Gram
-       kernel (``applyInPandas`` grouped on the cluster id, row-block
+    2. within-cluster pairwise cosine through the shared Arrow Gram
+       kernel (:func:`_pair_cosine_kernel`, ``applyInArrow`` grouped on
+       the cluster id, one diagonal group per cluster, row-block
        chunked so memory is bounded at ``block × |cluster|`` — the
        :func:`blocked_pair_cosine` trade applied cluster-locally).
        The first shipped kernel was a self-join with a per-pair
@@ -1426,9 +1348,9 @@ def semantic_dedup(
     cluster-bounded BLAS, CC is edges-proportional — the corpus never
     meets itself across clusters. NULL or wrong-length vectors get a
     NULL cluster from :func:`ivf_index`, are excluded from the kernel,
-    and come back as kept singletons — never silently dropped.
-    Zero-norm vectors match nothing (the expression kernel's NaN
-    comparison semantics, preserved exactly).
+    and come back as kept singletons — never silently dropped. A
+    vector of the right length with a null element raises
+    ``ValueError`` from the kernel. Zero-norm vectors match nothing.
 
     ``n_clusters`` is the scale knob. DEFAULT (``None``) auto-selects
     ~sqrt(corpus count) (:func:`semantic_n_clusters`), so within-cluster
@@ -1437,9 +1359,9 @@ def semantic_dedup(
     ``bands_per_key``. Auto mode is EAGER (one bounded ``count()`` at
     call time picks the knob); pass an explicit k to stay fully lazy.
 
-    Materialization of the cell assignment (referenced three times:
-    both join sides + the final output; without it the pandas_udf
-    assignment recomputes per reference): DEFAULT is
+    Materialization of the cell assignment (referenced twice: the edge
+    kernel + the final output; without it the pandas_udf assignment
+    recomputes per reference): DEFAULT is
     ``localCheckpoint(eager=True)`` — the id+embedding frame lands in
     EXECUTOR BLOCK STORAGE with lineage severed, so it must fit the
     cluster's storage memory/disk and an executor loss mid-query is
