@@ -609,3 +609,49 @@ def test_semantic_dedup_edges_are_grouped_blas_kernel(spark, op):
     )
     assert "BroadcastNestedLoopJoin" not in full, full
     assert "CartesianProduct" not in full, full
+
+
+#: the shapes of the benchmark's ``sql_analyst`` NumPy queries: np.* in
+#: SELECT and GROUP BY, and one register_numpy UDF
+_NUMPY_SQL = (
+    "SELECT np.floor(l_quantity / 5) AS bucket, count(*) AS n, "
+    "round(sum(np.log(l_extendedprice)), 4) AS log_rev FROM lineitem "
+    "WHERE l_tax <= 0.05 GROUP BY np.floor(l_quantity / 5) ORDER BY bucket"
+)
+_UDF_SQL = (
+    "SELECT l_linestatus, round(sum(plan_disc_price(l_extendedprice, "
+    "l_discount)), 2) AS rev FROM lineitem WHERE l_quantity < 25 "
+    "GROUP BY l_linestatus ORDER BY l_linestatus"
+)
+
+
+def _table_sql_plan(sql: str) -> str:
+    import vinum_spark as vs
+
+    df = vs.read_parquet(f"{SF_DIR}/lineitem.parquet").sql(sql).df
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+@pytest.mark.parametrize("sql", [_NUMPY_SQL, _UDF_SQL], ids=["numpy", "udf"])
+def test_traceable_numpy_sql_stays_in_jvm(spark, sql):
+    """np.floor, np.log and an arithmetic register_numpy fn compile to
+    Catalyst expressions: no Python worker in the plan."""
+    import vinum_spark as vs
+
+    vs.register_numpy("plan_disc_price", lambda p, d: p * (1.0 - d), "double")
+    plan = _table_sql_plan(sql)
+    assert "ArrowEvalPython" not in plan
+    assert "BatchEvalPython" not in plan
+
+
+def test_untraceable_numpy_udf_keeps_arrow_python(spark):
+    import numpy as np
+
+    import vinum_spark as vs
+
+    # a data-dependent branch cannot be traced
+    vs.register_numpy("plan_branchy", lambda x: np.where(x > 0, x, -x), "double")
+    plan = _table_sql_plan("SELECT plan_branchy(l_quantity) AS b FROM lineitem")
+    assert "ArrowEvalPython" in plan

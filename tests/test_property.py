@@ -407,9 +407,12 @@ def _diff_num(draw, depth=2):
         return f"({av} {op} {bv})", f"({ad} {op} {bd})", af or bf
     if kind == 4:
         sub = draw(st.integers(0, 2))
-        if sub == 0:  # np.* routes through the pandas-UDF machinery
+        if sub == 0:
+            # np.log/np.sqrt compile to Catalyst expressions; np.cbrt is
+            # outside the lowering table, so it keeps the pandas-UDF
+            # machinery under the fuzz
             fn, duck_fn = draw(st.sampled_from(
-                [("np.log", "ln"), ("np.sqrt", "sqrt")]
+                [("np.log", "ln"), ("np.sqrt", "sqrt"), ("np.cbrt", "cbrt")]
             ))
             # abs(e)+1 keeps the domain strictly positive in both engines
             return (

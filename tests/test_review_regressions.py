@@ -608,3 +608,24 @@ def test_spread_probe_cache_is_session_scoped(spark):
     D._spread(df, "doc_id").collect()
     cache = getattr(spark, D._SPREAD_PROBE_CACHE_ATTR, None)
     assert cache, "probe memo did not land on the session object"
+
+
+def test_stable_probe_key_separates_text_columns(spark):
+    """Two minhash candidate calls on ONE frame with different text
+    columns probe different signature frames, so they must not share a
+    _spread memo entry."""
+    from vinum_spark.operators import dedup as D
+
+    df = spark.createDataFrame(
+        [(i, f"a b c d {i}", f"x y z {i % 3}") for i in range(40)],
+        "doc_id long, t1 string, t2 string",
+    )
+    setattr(spark, D._SPREAD_PROBE_CACHE_ATTR, {})
+    for col in ("t1", "t2"):
+        sh = D._shingle_frame(df, col, "doc_id", 3).localCheckpoint(eager=False)
+        D.minhash_candidate_pairs(df, text_col=col, shingles=sh).collect()
+    keys = [
+        k for k in getattr(spark, D._SPREAD_PROBE_CACHE_ATTR)
+        if isinstance(k, tuple) and "mh_band_spread" in k
+    ]
+    assert sorted(k[1] for k in keys) == ["t1", "t2"]

@@ -80,9 +80,18 @@ class TestRewrites:
         assert out.startswith("select EXPLODE(ARRAY(")
 
     def test_np_flattening_reports_arity(self):
-        out, np_funcs = rewrite_sql("select np.log(x), np.power(x, 2) from t")
+        from vinum_spark.functions.udf import lowered_sql
+
+        sql = "select np.log(x), np.power(x, 2) from t"
+        out, np_funcs = rewrite_sql(sql)
         assert ("np.log", 1) in np_funcs and ("np.power", 2) in np_funcs
         assert "np_log_a1(x)" in out and "np_power_a2(x, 2)" in out
+        # with the lowering hook np.log renders as a Catalyst expression;
+        # np.power (integer power) stays a flattened pandas UDF
+        out, np_funcs = rewrite_sql(sql, lower=lowered_sql)
+        assert np_funcs == {("np.power", 2)}
+        assert "LN((x))" in out and "np_log" not in out
+        assert "np_power_a2(x, 2)" in out
 
     def test_np_agg_remap(self):
         out, np_funcs = rewrite_sql("select np.sum(x), np.min(x) from t")

@@ -104,6 +104,44 @@ def test_single_data_batch_drain_emits_everything(spark, dup_events_dir):
     assert got["event_id"].is_unique
 
 
+def test_single_data_batch_rejects_split_input(spark, dup_events_dir):
+    """An input split across batches (two files, one per trigger) cannot
+    honour single_data_batch: the drain must raise instead of stopping
+    at batch 0 with only the first file's rows in the sink."""
+    stream = stream_events(spark, dup_events_dir, max_files_per_trigger=1)
+    with pytest.raises(ValueError, match="maxFilesPerTrigger"):
+        run_stream_to_memory(
+            stream, "sdb_split_out", mode="append", single_data_batch=True
+        )
+
+
+def test_drain_raises_on_input_after_batch_zero():
+    """The progress guard behind single_data_batch: a batch after 0
+    that carries input raises; batch 0, or an empty later batch, stops
+    the drain."""
+    from vinum_spark.streaming.windows import _drain
+
+    class Query:
+        def __init__(self, progress):
+            self.lastProgress, self.isActive, self.stopped = progress, True, False
+
+        def exception(self):
+            return None
+
+        def stop(self):
+            self.stopped = True
+
+    q = Query({"batchId": 1, "numInputRows": 500})
+    with pytest.raises(RuntimeError, match="batch 1 carries 500 input rows"):
+        _drain(q, "split", 5.0, single_data_batch=True)
+    assert q.stopped
+    for progress in ({"batchId": 0, "numInputRows": 500},
+                     {"batchId": 2, "numInputRows": 0}):
+        q = Query(progress)
+        _drain(q, "ok", 5.0, single_data_batch=True)
+        assert q.stopped
+
+
 def test_dedup_within_watermark_stream_matches_batch(spark, dup_events_dir):
     """Built-in dropDuplicatesWithinWatermark twin: the doubled source
     deduped on event_id must reproduce the single-copy counts (the

@@ -14,7 +14,11 @@ from typing import Union
 from pyspark.sql import DataFrame
 
 from vinum_spark.api.table import Table
-from vinum_spark.functions.udf import ensure_udfs_registered, registered_udf_names
+from vinum_spark.functions.udf import (
+    ensure_udfs_registered,
+    lowered_sql,
+    registered_udf_names,
+)
 from vinum_spark.sqlprep.naming import output_column_names
 from vinum_spark.sqlprep.rewrite import rewrite_sql
 
@@ -31,7 +35,9 @@ def sql(query: str, **tables: Union[Table, DataFrame]) -> Table:
         name: (t.df if isinstance(t, Table) else t) for name, t in tables.items()
     }
     spark = next(iter(dfs.values())).sparkSession
-    rewritten, np_funcs = rewrite_sql(query, udf_names=registered_udf_names())
+    rewritten, np_funcs = rewrite_sql(
+        query, udf_names=registered_udf_names(), lower=lowered_sql
+    )
     ensure_udfs_registered(spark, np_funcs)
     for name, df in dfs.items():
         df.createOrReplaceTempView(name)

@@ -24,7 +24,11 @@ from vinum_spark.session import get_spark
 from vinum_spark.sqlprep.naming import output_column_names
 from vinum_spark.sqlprep.rewrite import has_aggregate_call, rewrite_sql
 from vinum_spark.sqlprep.tokens import KIND_IDENT, Token, render, tokenize
-from vinum_spark.functions.udf import ensure_udfs_registered, registered_udf_names
+from vinum_spark.functions.udf import (
+    ensure_udfs_registered,
+    lowered_sql,
+    registered_udf_names,
+)
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -68,12 +72,15 @@ class Table:
     def sql(self, query: str) -> "Table":
         """Run a SQL query against this table and return a new Table.
 
-        Pipeline: pre-pass rewrites → lazy UDF registration → temp views →
+        Pipeline: pre-pass rewrites (traceable NumPy calls inlined as
+        Catalyst expressions) → lazy UDF registration → temp views →
         ``spark.sql`` (Catalyst plans/optimizes/executes) → output-name
         normalization per the reference naming contract.
         """
         spark = self._df.sparkSession
-        rewritten, np_funcs = rewrite_sql(query, udf_names=registered_udf_names())
+        rewritten, np_funcs = rewrite_sql(
+            query, udf_names=registered_udf_names(), lower=lowered_sql
+        )
         from_dropped = _references_no_columns(query, self._df.columns)
         if from_dropped:
             rewritten = _drop_top_level_from(rewritten)

@@ -12,6 +12,15 @@ Spark (``vinum/core/udf.py:67-218``).
   :func:`ensure_udfs_registered` lazily wraps the numpy function in a
   pandas_udf registered under the flat name ``np_<fn>``.
 
+Calls that can be written as Catalyst expressions never reach a Python
+worker: :func:`lowered_sql` traces a ``double``-returning
+``register_numpy`` fn (and ``np.<fn>`` as the fn ``lambda *a:
+np.<fn>(*a)``) once on symbolic columns, and the SQL pre-pass renders
+the traced template inline (Froid-style UDF inlining). The trace fails,
+keeping the pandas UDF, on anything outside :data:`_LOWERING`: a
+data-dependent ``if``, indexing, attribute access, reductions, other
+NumPy functions.
+
 Names are case-insensitive and re-registration replaces
 (``vinum/core/udf.py:11-25``). Return types are inferred by probing the
 function on a tiny sample when not given explicitly.
@@ -19,6 +28,7 @@ function on a tiny sample when not given explicitly.
 
 from __future__ import annotations
 
+import functools
 import weakref
 from typing import Callable, Dict, Iterable, Optional, Set, Tuple
 
@@ -28,8 +38,10 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
-# name(lower) -> (kind, fn, spark_type_or_None, version)
-_REGISTRY: Dict[str, Tuple[str, Callable, Optional[T.DataType], int]] = {}
+# name(lower) -> (kind, fn, spark_type_or_None, version, lowered_or_None)
+_REGISTRY: Dict[
+    str, Tuple[str, Callable, Optional[T.DataType], int, Optional[Tuple[int, str]]]
+] = {}
 _version_counter = 0
 
 # live SparkSession -> {name: registered_version}. Weak keys: a stopped
@@ -55,7 +67,13 @@ def _register(name: str, kind: str, fn: Callable, return_type: Optional[str]) ->
     global _version_counter
     _version_counter += 1
     dt = T._parse_datatype_string(return_type) if return_type else None
-    _REGISTRY[name.lower()] = (kind, fn, dt, _version_counter)
+    lowered = None
+    if kind == "numpy":
+        arity = _arity_of(fn)
+        dt = dt or _infer_vector_type(fn, arity)
+        tpl = _trace(fn, arity, dt)
+        lowered = (arity, tpl) if tpl is not None else None
+    _REGISTRY[name.lower()] = (kind, fn, dt, _version_counter, lowered)
 
 
 def register_numpy_agg(
@@ -127,6 +145,139 @@ def _infer_scalar_type(fn: Callable, arity: int) -> T.DataType:
         except Exception:
             continue
     return T.DoubleType()
+
+
+# ---------------------------------------------------------------------------
+# Lowering to Catalyst: trace once, render inline
+# ---------------------------------------------------------------------------
+
+#: ufunc -> Spark SQL template over its arguments' SQL ({0}, {1}). An
+#: entry is added only with a differential test against the pandas-UDF
+#: path (tests/test_udf_lowering.py). Left out on purpose: divide (numpy
+#: gives ±inf at x/0, Spark NULL), round (half-even vs half-up), power
+#: (integer power), and anything that maps NaN — which is how a NULL
+#: reaches a pandas UDF — to a non-NaN value (isnan, isfinite, ...).
+_LOWERING: Dict[np.ufunc, str] = {
+    np.add: "({0} + {1})",
+    np.subtract: "({0} - {1})",
+    np.multiply: "({0} * {1})",
+    np.negative: "(- {0})",
+    np.absolute: "ABS({0})",
+    np.sqrt: "SQRT({0})",
+    np.sign: "SIGNUM({0})",
+    # FLOOR/CEIL return BIGINT, which saturates past 2^63 (and maps NaN
+    # to 0); a double of magnitude >= 2^52 is already integral
+    np.floor: "IF(ABS({0}) < 4503599627370496D, CAST(FLOOR({0}) AS DOUBLE), {0})",
+    np.ceil: "IF(ABS({0}) < 4503599627370496D, CAST(CEIL({0}) AS DOUBLE), {0})",
+    # Spark's logs are NULL at ±0.0, numpy's are -inf
+    np.log: "IF({0} = 0, DOUBLE('-inf'), LN({0}))",
+    np.log2: "IF({0} = 0, DOUBLE('-inf'), LOG2({0}))",
+    np.log10: "IF({0} = 0, DOUBLE('-inf'), LOG10({0}))",
+    np.exp: "EXP({0})",
+    np.sin: "SIN({0})",
+    np.cos: "COS({0})",
+    np.tan: "TAN({0})",
+}
+
+
+class _Untraceable(Exception):
+    pass
+
+
+def _sql_operand(v) -> str:
+    """SQL of a traced value or a Python/NumPy scalar constant."""
+    if isinstance(v, _Traced):
+        return v.sql
+    if isinstance(v, (bool, np.bool_)):
+        raise _Untraceable("boolean constant")
+    if isinstance(v, (int, np.integer)) and -(2**63) <= int(v) < 2**63:
+        return f"({int(v)})"
+    if isinstance(v, float):  # np.float64 included
+        if v != v or v in (float("inf"), float("-inf")):
+            return f"DOUBLE('{v}')"
+        # a bare 1.5 is a DECIMAL in Spark SQL; the D suffix makes it a double
+        return f"({float(v)!r}D)"
+    raise _Untraceable(f"constant of type {type(v).__name__}")
+
+
+class _Traced:
+    """A symbolic column. Python arithmetic and the ufuncs of
+    :data:`_LOWERING` build SQL instead of values; anything a traced body
+    could branch on, index or reduce raises :class:`_Untraceable`."""
+
+    __slots__ = ("sql",)
+
+    def __init__(self, sql: str):
+        self.sql = sql
+
+    def __array_ufunc__(self, ufunc, method, *inputs, **kwargs):
+        tpl = _LOWERING.get(ufunc)
+        if tpl is None or method != "__call__" or kwargs:
+            raise _Untraceable(f"np.{ufunc.__name__}")
+        return _Traced(tpl.format(*(_sql_operand(v) for v in inputs)))
+
+    def __array_function__(self, func, types, args, kwargs):
+        raise _Untraceable(func.__name__)
+
+    def __array__(self, *args, **kwargs):
+        raise _Untraceable("array conversion")
+
+    def __bool__(self):
+        raise _Untraceable("data-dependent branch")
+
+    def _compare(self, other):
+        raise _Untraceable("comparison")
+
+    __eq__ = __ne__ = __lt__ = __le__ = __gt__ = __ge__ = _compare
+    __hash__ = None
+
+    __add__ = lambda a, b: np.add(a, b)
+    __radd__ = lambda a, b: np.add(b, a)
+    __sub__ = lambda a, b: np.subtract(a, b)
+    __rsub__ = lambda a, b: np.subtract(b, a)
+    __mul__ = lambda a, b: np.multiply(a, b)
+    __rmul__ = lambda a, b: np.multiply(b, a)
+    __neg__ = lambda a: np.negative(a)
+    __abs__ = lambda a: np.absolute(a)
+
+
+def _trace(fn: Callable, arity: int, dt: T.DataType) -> Optional[str]:
+    """The SQL template (``{i}`` = i-th argument's SQL) of ``fn``, or
+    None when ``fn`` cannot run as a Catalyst expression.
+
+    The result is cast to the declared ``double`` and NaN becomes NULL,
+    as the pandas-UDF path returns it; integer arithmetic keeps numpy's
+    (and Spark's) wrapping integer types until that cast."""
+    if not isinstance(dt, T.DoubleType):
+        return None
+    try:
+        out = fn(*(_Traced(f"({{{i}}})") for i in range(arity)))
+    except Exception:  # user code: any failure means "run it as a UDF"
+        return None
+    if not isinstance(out, _Traced):
+        return None
+    return f"nullif(CAST({out.sql} AS DOUBLE), DOUBLE('NaN'))"
+
+
+def lowered_sql(name: str, arity: int) -> Optional[str]:
+    """Catalyst SQL template for a call ``name(<arity args>)`` — a
+    traceable ``register_numpy`` fn or ``np.<fn>`` — or None when the
+    call stays a pandas UDF. Argument ``i``'s SQL fills ``{i}``."""
+    name = name.lower()
+    if name in _REGISTRY:
+        lowered = _REGISTRY[name][4]
+        return lowered[1] if lowered and lowered[0] == arity else None
+    return _lower_np(name, arity) if name.startswith("np.") else None
+
+
+@functools.lru_cache(maxsize=None)
+def _lower_np(dotted: str, arity: int) -> Optional[str]:
+    # np.f(args) is the trace of lambda *a: np.f(*a)
+    try:
+        np_fn = _resolve_np(dotted)
+    except (AttributeError, ValueError):
+        return None
+    return _trace(np_fn, arity, _infer_vector_type(np_fn, arity))
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +363,7 @@ def ensure_udfs_registered(
     (b) each ``np.*`` function the current query references."""
     state = _SESSION_STATE.setdefault(spark, {})
 
-    for name, (kind, fn, dt, version) in list(_REGISTRY.items()):
+    for name, (kind, fn, dt, version, _) in list(_REGISTRY.items()):
         if state.get(name) == version:
             continue
         arity = _arity_of(fn)
@@ -223,7 +374,7 @@ def ensure_udfs_registered(
             state[name] = version
             continue
         if kind == "numpy":
-            dtype = dt or _infer_vector_type(fn, arity)
+            dtype = dt  # inferred at registration
             vec_fn = fn
         else:
             # Scalar Python fn → vectorized with np.vectorize, exactly the

@@ -1588,9 +1588,9 @@ def q44(spark, sf_dir):
     ORDER BY l_returnflag
     """,
     "The full Table.sql() pipeline under the correctness gate: SQL "
-    "pre-pass (np.* resolution, naming contract), lazy UDF registration, "
-    "Catalyst execution — the reference's primary entry point "
-    "(vinum/api/table.py:191).",
+    "pre-pass (np.log compiled to a Catalyst ln expression, naming "
+    "contract), lazy UDF registration, Catalyst execution — the "
+    "reference's primary entry point (vinum/api/table.py:191).",
 )
 def q45(spark, sf_dir):
     from vinum_spark.api.table import Table

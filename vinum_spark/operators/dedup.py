@@ -178,7 +178,9 @@ def _shingles(col: Column, n: int) -> Column:
     return F.array_distinct(grams)
 
 
-def _stable_probe_key(parent: DataFrame, *tag):
+def _stable_probe_key(
+    parent: DataFrame, text_col: str, shingles: Optional[DataFrame], *tag
+):
     """Run-stable :func:`_spread` memo key: the PARENT plan's
     semanticHash plus the derivation parameters. The parent is the
     frame the probed one is deterministically derived from BEFORE any
@@ -186,11 +188,23 @@ def _stable_probe_key(parent: DataFrame, *tag):
     plan, so the checkpointed frame's own semanticHash never repeats
     across runs and the probe memo misses every time. The parent
     (typically the memoized table scan) keeps one analyzed plan per
-    session, so this is one cheap JVM call. Returns None (caller falls
-    back to the probed frame's own hash) when the parent cannot be
-    analyzed."""
+    session, so this is one cheap JVM call. ``text_col`` and a tag of
+    the precomputed ``shingles`` frame (a checkpoint's partition
+    count, else its plan's semanticHash) are part of the key: a
+    different text column or shingle layout yields a different probed
+    frame. Returns None (caller falls back to the probed frame's own
+    hash) when the parent cannot be analyzed."""
     try:
-        return (parent._jdf.queryExecution().analyzed().semanticHash(), *tag)
+        sh = None
+        if shingles is not None:
+            plan = shingles._jdf.queryExecution().analyzed()
+            sh = (
+                plan.rdd().getNumPartitions()
+                if plan.nodeName() == "LogicalRDD"
+                else plan.semanticHash()
+            )
+        parent_hash = parent._jdf.queryExecution().analyzed().semanticHash()
+        return (parent_hash, text_col, sh, *tag)
     except Exception:
         return None
 
@@ -389,7 +403,9 @@ def minhash_candidate_pairs(
     # frame's own plan hash is run-unique — key the partition probe on
     # the stable corpus frame instead (one probe per session)
     probe_key = (
-        _stable_probe_key(df, "mh_band_spread", n_hashes, shingle_size)
+        _stable_probe_key(
+            df, text_col, shingles, "mh_band_spread", n_hashes, shingle_size
+        )
         if shingles is not None
         else None
     )
@@ -678,7 +694,7 @@ def simhash_candidate_pairs(
         # the checkpoint makes this frame's plan hash run-unique; key
         # the partition probe on the stable corpus frame instead
         probe_key=_stable_probe_key(
-            df, "simhash_spread", shingle_size, band_bits
+            df, text_col, shingles, "simhash_spread", shingle_size, band_bits
         ),
     )
     n_bands = 64 // band_bits

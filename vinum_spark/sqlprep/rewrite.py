@@ -5,9 +5,11 @@ Each rewrite reproduces a reference behavior that Spark SQL does not share:
 - vinum builtin functions (``vinum/core/functions.py:353-387``) that have a
   different name or shape in Spark (``to_int`` → CAST, ``from_timestamp`` →
   ``timestamp_seconds``, …);
-- ``np.<fn>(...)`` callable directly from SQL
-  (``vinum/core/udf.py:46-54``) — rewritten to a flat registered name
-  ``np_<fn>`` and reported to the caller for lazy pandas_udf registration;
+- ``np.<fn>(...)`` and registered NumPy UDFs callable directly from SQL
+  (``vinum/core/udf.py:46-54``) — rendered inline as the Catalyst
+  expression the caller's ``lower`` hook traced for them; an ``np.*``
+  call without one is rewritten to a flat registered name ``np_<fn>``
+  and reported to the caller for lazy pandas_udf registration;
 - ``expr = NULL`` / ``!= NULL`` → ``IS [NOT] NULL``
   (``vinum/parser/parser.py:143-146``);
 - pg ``#`` xor → Spark ``^`` (``vinum/parser/parser.py:77-80``);
@@ -17,7 +19,7 @@ Each rewrite reproduces a reference behavior that Spark SQL does not share:
 
 from __future__ import annotations
 
-from typing import Callable, Dict, List, Set, Tuple
+from typing import Callable, Dict, List, Optional, Set, Tuple
 
 from vinum_spark.sqlprep.tokens import (
     KIND_IDENT,
@@ -146,8 +148,13 @@ _FUNCTION_TEMPLATES: Dict[str, Callable[[List[str]], str]] = {
 }
 
 
+#: Lowering hook: ``(name, arity) -> SQL template or None`` (see
+#: ``vinum_spark.functions.udf.lowered_sql``).
+Lower = Callable[[str, int], Optional[str]]
+
+
 def rewrite_sql(
-    sql: str, udf_names: Set[str] | None = None
+    sql: str, udf_names: Set[str] | None = None, lower: Optional[Lower] = None
 ) -> Tuple[str, Set[Tuple[str, int]]]:
     """Apply all pre-pass rewrites.
 
@@ -159,6 +166,10 @@ def rewrite_sql(
     ``udf_names``: names registered via register_python/register_numpy —
     excluded from builtin templating so user UDFs win (the reference lets
     re-registration shadow builtins, ``vinum/core/udf.py:11-25``).
+
+    ``lower``: for a UDF or ``np.*`` call, the SQL template (argument
+    ``i``'s SQL fills ``{i}``) that computes it in Catalyst, or None to
+    keep the call a UDF.
     """
     tokens = tokenize(sql)
     np_funcs: Set[Tuple[str, int]] = set()
@@ -171,7 +182,7 @@ def rewrite_sql(
     tokens = _rewrite_having_without_groupby(tokens)
     tokens = _rewrite_orderby_nulls_last(tokens)
     tokens = _rewrite_limit_comma(tokens)
-    out_sql = _rewrite_functions(tokens, np_funcs, udf_names or set())
+    out_sql = _rewrite_functions(tokens, np_funcs, udf_names or set(), lower)
     return out_sql, np_funcs
 
 
@@ -646,10 +657,33 @@ _SQL_KEYWORDS_NOT_FUNCTIONS = {
 }
 
 
+#: A lowered template may repeat an argument; Catalyst evaluates a
+#: repeated deterministic expression once, these functions per use.
+_NONDETERMINISTIC = {
+    "rand", "randn", "random", "uniform", "randstr", "uuid", "shuffle",
+    "monotonically_increasing_id",
+}
+
+
 def _rewrite_functions(
-    tokens: List[Token], np_funcs: Set[Tuple[str, int]], udf_names: Set[str]
+    tokens: List[Token],
+    np_funcs: Set[Tuple[str, int]],
+    udf_names: Set[str],
+    lower: Optional[Lower],
 ) -> str:
-    """Recursively rewrite function calls via templates / np.* flattening."""
+    """Recursively rewrite function calls via templates / lowering /
+    np.* flattening."""
+
+    def lowered(lname: str, args: List[str], inner: List[Token]) -> Optional[str]:
+        tpl = lower(lname, len(args)) if lower is not None else None
+        if tpl is None or any(
+            t.kind == KIND_IDENT
+            and t.text.lower() in _NONDETERMINISTIC
+            and nxt.text == "("
+            for t, nxt in zip(inner, inner[1:])
+        ):
+            return None
+        return tpl.format(*args)
 
     def walk(toks: List[Token]) -> str:
         parts: List[Token] = []
@@ -671,15 +705,19 @@ def _rewrite_functions(
                 name = t.text
                 lname = name.lower()
                 if lname in udf_names:
-                    rendered = f"{lname}({', '.join(args)})"
+                    rendered = lowered(lname, args, inner) or (
+                        f"{lname}({', '.join(args)})"
+                    )
                 elif lname in _FUNCTION_TEMPLATES:
                     rendered = _FUNCTION_TEMPLATES[lname](args)
                 elif lname.startswith("np."):
-                    # arity-qualified flat name: np.round(x) and
-                    # np.round(x, 2) need two distinct registrations
-                    flat = f"np_{lname[3:].replace('.', '_')}_a{len(args)}"
-                    np_funcs.add((lname, len(args)))
-                    rendered = f"{flat}({', '.join(args)})"
+                    rendered = lowered(lname, args, inner)
+                    if rendered is None:
+                        # arity-qualified flat name: np.round(x) and
+                        # np.round(x, 2) need two distinct registrations
+                        flat = f"np_{lname[3:].replace('.', '_')}_a{len(args)}"
+                        np_funcs.add((lname, len(args)))
+                        rendered = f"{flat}({', '.join(args)})"
                 else:
                     # count(*): render raw; otherwise use the recursively
                     # rewritten args (walk preserves a leading DISTINCT

@@ -16,7 +16,8 @@ _TOKEN_RE = re.compile(
   | (?P<comment>--[^\n]*|/\*.*?\*/)
   | (?P<string>'(?:[^']|'')*')
   | (?P<qident>"(?:[^"]|"")*"|`(?:[^`]|``)*`)
-  | (?P<number>(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?)
+  | (?P<number>(?:\d+\.\d*|\.\d+|\d+)(?:[eE][+-]?\d+)?
+               (?:(?:BD|bd|[DdLlSsYyFf])(?![A-Za-z_0-9]))?)  # typed: 1.0D, 2L
   | (?P<ident>[A-Za-z_][A-Za-z_0-9]*(?:\.[A-Za-z_][A-Za-z_0-9]*)*)
   | (?P<op>==|<=|>=|<>|!=|->|\|\||::|[=<>+\-*/%^#~&|])
   | (?P<punct>[(),.;\[\]])

@@ -76,8 +76,10 @@ def stream_distinct(
     inactivity exceeded ``timeout_ms`` — the same trigger-granularity
     observable behavior as the per-group timeout, whose firing is also
     only visible when a later duplicate is re-admitted. Per-group
-    clocks use the executor's wall clock rather than Spark's batch
-    clock; the difference is bounded by one trigger interval.
+    clocks read the batch's processing time
+    (``GroupState.getCurrentProcessingTimeMs``), the clock the
+    bucket-level timeout runs on, so executor clock skew cannot move
+    an eviction.
 
     Restart constraint: seen-key digests come from
     ``pd.util.hash_pandas_object`` (vectorized; stable across runs,
@@ -183,11 +185,11 @@ def _stream_distinct_bucketed(
     def dedup_bucket(
         key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        import time as _time
-
         import numpy as np
 
-        now_ms = int(_time.time() * 1000)
+        # the batch's processing-time clock, the one the timeout runs on;
+        # an executor wall clock could skew between batches
+        now_ms = int(state.getCurrentProcessingTimeMs())
         if state.hasTimedOut:
             # the bucket-level timeout fires only after the WHOLE bucket
             # was quiet for timeout_ms, so every member group's own
@@ -238,7 +240,7 @@ def _stream_distinct_bucketed(
             new = present[~np.isin(present, groups)]
             groups = np.concatenate([groups, new])
             last_seen = np.concatenate(
-                [last_seen, np.empty(len(new), dtype="int64")]
+                [last_seen, np.full(len(new), now_ms, dtype="int64")]
             )
             last_seen[np.isin(groups, present)] = now_ms
         state.update(

@@ -316,7 +316,7 @@ def _drain(
 
     ``single_data_batch=True`` is the caller's assertion that batch 0
     holds EVERY row the query will ever emit — a static source read
-    without ``maxFilesPerTrigger`` (availableNow then plans all files
+    without a per-trigger limit (availableNow then plans all files
     into one batch) through operators that emit only in response to
     input (no event-time watermark finalization, no timeout-driven
     emission). The drain then stops at batch 0's commit instead of
@@ -326,6 +326,9 @@ def _drain(
     drain latency when nothing can be emitted. (``status.
     isDataAvailable`` is NOT used as the signal: it blips false
     transiently between DATA batches, so it cannot prove exhaustion.)
+    A later batch that carries input proves the assertion false and
+    raises instead of truncating; ``run_stream_to_memory`` rejects a
+    source with a per-trigger limit before the query starts.
     """
     import time
 
@@ -333,10 +336,16 @@ def _drain(
         deadline = time.monotonic() + idle_timeout
         while q.isActive:
             lp = q.lastProgress
-            if lp is not None and single_data_batch:
-                break  # batch 0 committed == everything committed
-            if lp is not None and lp["numInputRows"] == 0 and lp["batchId"] > 0:
-                break
+            if lp is not None:
+                later, rows = lp["batchId"] > 0, lp["numInputRows"]
+                if single_data_batch and later and rows > 0:
+                    raise RuntimeError(
+                        f"stream {name!r}: single_data_batch, but batch "
+                        f"{lp['batchId']} carries {rows} input rows — the "
+                        f"input did not land in batch 0"
+                    )
+                if single_data_batch or (later and rows == 0):
+                    break  # everything committed
             if time.monotonic() > deadline:
                 raise TimeoutError(
                     f"stream {name!r} did not drain within "
@@ -348,6 +357,22 @@ def _drain(
             raise exc
     finally:
         q.stop()
+
+
+#: file-source options that split an availableNow input across batches
+_PER_TRIGGER_LIMITS = {"maxfilespertrigger", "maxbytespertrigger"}
+
+
+def _per_trigger_limits(stream_df: DataFrame) -> list:
+    """Per-trigger limit options set on ``stream_df``'s file sources."""
+    leaves = stream_df._jdf.queryExecution().analyzed().collectLeaves()
+    found = []
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.nodeName() == "StreamingRelation":
+            keys = leaf.dataSource().options().keys().mkString("\n").split("\n")
+            found += [k for k in keys if k.lower() in _PER_TRIGGER_LIMITS]
+    return found
 
 
 def run_stream_to_memory(
@@ -363,7 +388,9 @@ def run_stream_to_memory(
 
     ``single_data_batch``: see :func:`_drain` — opt-in early stop at
     batch 0's commit for sources whose entire input lands in one batch
-    and operators that emit only on input.
+    and operators that emit only on input. A source read with a
+    per-trigger limit (``maxFilesPerTrigger`` and the like) splits its
+    input across batches and raises ``ValueError``.
 
     ``state_partitions``: number of shuffle/state-store partitions for
     THIS query (``spark.sql.shuffle.partitions`` is captured at query
@@ -398,6 +425,13 @@ def run_stream_to_memory(
     in the sink — stop there. Queries that self-terminate (non-stateful,
     or ``NoTimeout``) exit the poll via ``isActive`` instead.
     """
+    if single_data_batch:
+        limited = _per_trigger_limits(stream_df)
+        if limited:
+            raise ValueError(
+                f"single_data_batch needs all input in batch 0, but the "
+                f"source sets {', '.join(limited)}"
+            )
     writer = (
         stream_df.writeStream.format("memory")
         .queryName(table_name)
