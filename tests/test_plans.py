@@ -655,3 +655,21 @@ def test_untraceable_numpy_udf_keeps_arrow_python(spark):
     vs.register_numpy("plan_branchy", lambda x: np.where(x > 0, x, -x), "double")
     plan = _table_sql_plan("SELECT plan_branchy(l_quantity) AS b FROM lineitem")
     assert "ArrowEvalPython" in plan
+
+
+@pytest.mark.parametrize(
+    "timeout_ms, root",
+    [(0, "Deduplicate"), (None, "FlatMapGroupsInPandasWithState")],
+    ids=["exact", "default_timeout"],
+)
+def test_stream_distinct_exact_retention_is_native_dedup(
+    spark, timeout_ms, root
+):
+    """timeout_ms=0 plans as Spark's streaming Deduplicate (no Python
+    worker); the default inactivity timeout keeps the pandas operator."""
+    from vinum_spark.streaming import stream_events
+    from vinum_spark.streaming.stateful import stream_distinct
+
+    kw = {} if timeout_ms is None else {"timeout_ms": timeout_ms}
+    df = stream_distinct(stream_events(spark, f"{SF_DIR}/events.parquet"), **kw)
+    assert df._jdf.queryExecution().analyzed().nodeName() == root

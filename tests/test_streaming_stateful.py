@@ -50,7 +50,8 @@ def test_stream_distinct_state_bounded_by_default():
 
 
 def test_stream_distinct_unbounded_opt_in(spark, dup_events_dir):
-    """timeout_ms=0 (explicit) still runs with NoTimeout exact retention."""
+    """timeout_ms=0 (explicit) keeps exact retention across batches,
+    through Spark's native streaming dropDuplicates."""
     stream = stream_events(spark, dup_events_dir, max_files_per_trigger=1)
     deduped = stream_distinct(
         stream, group_col="user_id", key_cols=["event_id"], timeout_ms=0
@@ -81,11 +82,95 @@ def test_stream_distinct_bucketed_matches_per_group(spark, dup_events_dir):
 
 
 def test_stream_distinct_bucketed_validates_buckets(spark, dup_events_dir):
-    import pytest as _pytest
-
     stream = stream_events(spark, dup_events_dir)
-    with _pytest.raises(ValueError, match="group_buckets"):
-        stream_distinct(stream, group_buckets=0)
+    for timeout_ms in (0, 60_000):  # validated on the native path too
+        with pytest.raises(ValueError, match="group_buckets"):
+            stream_distinct(stream, timeout_ms=timeout_ms, group_buckets=0)
+    with pytest.raises(ValueError, match="timeout_ms"):
+        stream_distinct(stream, timeout_ms=-1)
+
+
+@pytest.fixture(scope="module")
+def null_dup_events_dir(spark, dup_events_dir, tmp_path_factory):
+    """dup_events_dir's 500 events written as two files, with NULL-key
+    rows: two keys with a NULL user_id in both files, and one key
+    (user 7, NULL event_id) held by two rows of the first file only —
+    so event_id carries a NULL in the first batch and none in the
+    second."""
+    out = str(tmp_path_factory.mktemp("null_dup_events"))
+    base = spark.read.parquet(dup_events_dir).distinct().cache()
+    head = base.orderBy("event_id").limit(2)
+    null_user = head.withColumn("user_id", F.lit(None).cast("bigint"))
+    null_event = head.withColumn("event_id", F.lit(None).cast("bigint"))
+    null_event = null_event.withColumn("user_id", F.lit(7).cast("bigint"))
+    first = base.unionByName(null_user).unionByName(null_event)
+    first.coalesce(1).write.mode("overwrite").parquet(out)
+    base.unionByName(null_user).coalesce(1).write.mode("append").parquet(out)
+    base.unpersist()
+    yield out
+    shutil.rmtree(out, ignore_errors=True)
+
+
+def test_stream_distinct_native_matches_python_path(spark, null_dup_events_dir):
+    """timeout_ms=0 (dropDuplicates) and the default-timeout Python
+    path, per-group and bucketed, emit the same (user_id, event_id)
+    set over multi-batch input — the first occurrence per key, NULLs
+    comparing equal, and a key next to a NULL in one batch matching
+    itself in a NULL-free batch."""
+    want = {
+        tuple(r)
+        for r in spark.read.parquet(null_dup_events_dir)
+        .select("user_id", "event_id")
+        .distinct()
+        .collect()
+    }
+    assert (None, None) not in want and len(want) == 500 + 2 + 1
+    for label, kw in (
+        ("native", {"timeout_ms": 0}),
+        ("per_group", {}),
+        ("bucketed", {"group_buckets": 16}),
+    ):
+        stream = stream_events(
+            spark, null_dup_events_dir, max_files_per_trigger=1
+        )
+        deduped = stream_distinct(
+            stream, group_col="user_id", key_cols=["event_id"], **kw
+        )
+        run_stream_to_memory(deduped, f"parity_{label}", mode="append")
+        got = [
+            tuple(r)
+            for r in spark.table(f"parity_{label}")
+            .select("user_id", "event_id")
+            .collect()
+        ]
+        assert len(got) == len(want), label
+        assert set(got) == want, label
+
+
+def test_stream_distinct_checkpoint_layout_mismatch_raises(
+    spark, dup_events_dir, tmp_path
+):
+    """A checkpoint written by the Python path (default timeout) cannot
+    be resumed as the native dedup: Spark refuses the mismatched state
+    operator instead of silently re-admitting seen keys."""
+    from pyspark.errors import StreamingQueryException
+
+    from vinum_spark.streaming.windows import run_stream_to_parquet
+
+    src, ckpt, out = (str(tmp_path / d) for d in ("src", "ckpt", "out"))
+    rows = spark.read.parquet(dup_events_dir).limit(20)
+    rows.coalesce(1).write.parquet(src)
+    run_stream_to_parquet(stream_distinct(stream_events(spark, src)), out, ckpt)
+    # the resumed query plans a batch (and checks its state) only when
+    # new input arrived
+    rows.coalesce(1).write.mode("append").parquet(src)
+    with pytest.raises(
+        StreamingQueryException,
+        match="STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA",
+    ):
+        run_stream_to_parquet(
+            stream_distinct(stream_events(spark, src), timeout_ms=0), out, ckpt
+        )
 
 
 def test_single_data_batch_drain_emits_everything(spark, dup_events_dir):
@@ -124,6 +209,7 @@ def test_drain_raises_on_input_after_batch_zero():
     class Query:
         def __init__(self, progress):
             self.lastProgress, self.isActive, self.stopped = progress, True, False
+            self.recentProgress = [progress]
 
         def exception(self):
             return None
@@ -140,6 +226,44 @@ def test_drain_raises_on_input_after_batch_zero():
         q = Query(progress)
         _drain(q, "ok", 5.0, single_data_batch=True)
         assert q.stopped
+
+
+def test_drain_stops_after_this_runs_first_batch():
+    """A resumed drain's first batch can replay the previous run's
+    empty batch (batch 2 here), with the new input only in batch 3: the
+    drain must not stop before the empty batch after it. A fresh run
+    still stops at its first empty batch after batch 0."""
+    from vinum_spark.streaming.windows import _drain
+
+    class Query:
+        """Progress advances one batch per poll of ``lastProgress``."""
+
+        def __init__(self, batches):
+            self.batches, self.seen, self.stopped_at = batches, 0, None
+            self.isActive = True
+
+        @property
+        def lastProgress(self):
+            self.seen = min(self.seen + 1, len(self.batches))
+            return self.recentProgress[-1]
+
+        @property
+        def recentProgress(self):
+            return [
+                {"batchId": b, "numInputRows": n}
+                for b, n in self.batches[: self.seen]
+            ]
+
+        def exception(self):
+            return None
+
+        def stop(self):
+            self.stopped_at = self.recentProgress[-1]["batchId"]
+
+    for batches, stop in (([(2, 0), (3, 2), (4, 0)], 4), ([(0, 3), (1, 0)], 1)):
+        q = Query(batches)
+        _drain(q, "resumed", 2.0)
+        assert q.stopped_at == stop
 
 
 def test_dedup_within_watermark_stream_matches_batch(spark, dup_events_dir):

@@ -1,16 +1,16 @@
-"""Custom stateful streaming operator: exact deduplication over an
-unbounded stream via ``applyInPandasWithState``.
+"""Exact streaming deduplication: ``stream_distinct``.
 
 ``stream_distinct`` emits only the FIRST occurrence of each key per
-group — the streaming twin of ``operators.dedup.dedup_exact``. State per
-group is the set of seen key hashes (stored compactly as int64 xxhash-
-style digests); a processing-time timeout bounds state for groups that
-go quiet, the knob that keeps state finite at 100 TB/day.
+group — the streaming twin of ``operators.dedup.dedup_exact``.
 
-This is pattern (b) from the build spec: semantics Spark's built-ins
-can't express (``dropDuplicates`` on streams supports no per-group
-eviction policy and no custom key normalization) implemented as an
-Arrow-batched stateful pandas operator.
+Unbounded exact retention (``timeout_ms=0``) is Spark's own streaming
+``dropDuplicates``: a JVM state-store operator that keeps one row per
+``(group, *keys)`` and starts no Python worker. The default bounded
+mode evicts a group's seen-set after a processing-time inactivity
+timeout, the knob that keeps state finite at 100 TB/day — a per-group
+eviction policy ``dropDuplicates`` cannot express, so that mode runs as
+an Arrow-batched ``applyInPandasWithState`` operator whose state per
+group is the set of seen key digests (int64).
 """
 
 from __future__ import annotations
@@ -20,6 +20,24 @@ from typing import Iterator, List, Sequence, Tuple
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+
+def _stable_key_dtypes(schema, cols: Sequence[str]) -> dict:
+    """pandas dtype per key column whose Arrow-to-pandas form depends on
+    NULLs elsewhere in the chunk: a long column holding a NULL arrives
+    as float64 and a boolean one as object, and both hash differently
+    from the NULL-free int64/bool form — so a key seen next to a NULL
+    in one batch would not match itself in the next. The nullable
+    dtypes hash a non-NULL value exactly as int64/bool do."""
+    from pyspark.sql.types import BooleanType, IntegralType
+
+    out = {}
+    for f in schema.fields:
+        if f.name in cols and isinstance(f.dataType, IntegralType):
+            out[f.name] = "Int64"
+        elif f.name in cols and isinstance(f.dataType, BooleanType):
+            out[f.name] = "boolean"
+    return out
 
 
 def _hadoop_path_exists(spark, path: str) -> bool:
@@ -51,9 +69,23 @@ def stream_distinct(
     1 hour) evicts a group's seen-set after that much processing-time
     inactivity — memory stays bounded at the cost of re-admitting a
     duplicate that arrives after its group went quiet for the timeout.
-    Pass ``timeout_ms=0`` to opt in to unbounded exact retention.
 
-    ``group_buckets``: state-sharding knob (round 19, guide §4.1).
+    ``timeout_ms=0`` opts in to unbounded exact retention and plans as
+    Spark's streaming ``dropDuplicates([group_col, *key_cols])``
+    (``StreamingDeduplicateExec``): JVM-only, each batch writes only its
+    new keys to the state store, and keys compare exactly (no digest
+    collisions; NULLs compare equal, as in the digest path). Inside one
+    batch the survivor is the first row the state task sees. State
+    holds one row per distinct key and never shrinks, so a large
+    deployment should run it on the RocksDB state store
+    (``run_stream_to_parquet(..., state_store="rocksdb")``), which keeps
+    state off-heap. A checkpoint written with ``timeout_ms > 0`` cannot
+    be resumed with ``timeout_ms=0`` (or back): Spark refuses the
+    mismatched state operator at restart.
+
+    ``group_buckets``: state-sharding knob for ``timeout_ms > 0``
+    (validated, otherwise unused at ``timeout_ms=0``, which has no
+    per-group Python protocol to amortize).
     ``applyInPandasWithState`` pays a fixed protocol cost PER GROUP per
     batch — a pandas slice, an Arrow state round-trip, a ``state.get``/
     ``update`` py4j exchange — so a corpus with many small groups (the
@@ -81,9 +113,9 @@ def stream_distinct(
     bucket-level timeout runs on, so executor clock skew cannot move
     an eviction.
 
-    Restart constraint: seen-key digests come from
-    ``pd.util.hash_pandas_object`` (vectorized; stable across runs,
-    processes, and machines FOR A GIVEN pandas version, but not a
+    Restart constraint (``timeout_ms > 0`` only): seen-key digests come
+    from ``pd.util.hash_pandas_object`` (vectorized; stable across
+    runs, processes, and machines FOR A GIVEN pandas version, but not a
     documented cross-version contract). Digests persist in the state
     store, so a checkpointed query restarted under a DIFFERENT pandas
     version could miss previously-seen keys (silently re-admitting
@@ -91,6 +123,12 @@ def stream_distinct(
     or start a fresh checkpoint on upgrade. (The in-repo consumers use
     a fresh per-run checkpoint, where the constraint is vacuous.)
     """
+    if timeout_ms < 0:
+        raise ValueError(f"timeout_ms must be >= 0, got {timeout_ms}")
+    if group_buckets is not None and group_buckets < 1:
+        raise ValueError(f"group_buckets must be >= 1, got {group_buckets}")
+    if timeout_ms == 0:
+        return df.dropDuplicates([group_col, *key_cols])
     if group_buckets is not None:
         return _stream_distinct_bucketed(
             df, group_col, list(key_cols), timeout_ms, group_buckets
@@ -98,6 +136,7 @@ def stream_distinct(
     schema = df.schema
     out_cols = [f.name for f in schema.fields]
     key_list: List[str] = list(key_cols)
+    key_dtypes = _stable_key_dtypes(schema, key_list)
 
     def dedup_group(
         key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -124,7 +163,9 @@ def stream_distinct(
         )
         for pdf in pdfs:
             dig = (
-                pd.util.hash_pandas_object(pdf[key_list], index=False)
+                pd.util.hash_pandas_object(
+                    pdf[key_list].astype(key_dtypes), index=False
+                )
                 .to_numpy()
                 .view("int64")
             )
@@ -136,20 +177,14 @@ def stream_distinct(
                 yield out[out_cols]
             seen = np.union1d(seen, dig)
         state.update((seen.tolist(),))
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
+        state.setTimeoutDuration(timeout_ms)
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
     return df.groupBy(group_col).applyInPandasWithState(
         dedup_group,
         outputStructType=schema,
         stateStructType="seen array<long>",
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
@@ -174,13 +209,11 @@ def _stream_distinct_bucketed(
     """
     from pyspark.sql import functions as F
 
-    if group_buckets < 1:
-        raise ValueError(
-            f"group_buckets must be >= 1, got {group_buckets}"
-        )
     schema = df.schema
     out_cols = [f.name for f in schema.fields]
     dig_cols = [group_col] + key_list
+    dig_dtypes = _stable_key_dtypes(schema, dig_cols)
+    group_dtype = _stable_key_dtypes(schema, [group_col])
 
     def dedup_bucket(
         key: Tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -200,15 +233,14 @@ def _stream_distinct_bucketed(
             groups, last_seen, digs, dig_group = (
                 np.asarray(a, dtype="int64") for a in state.get
             )
-            if timeout_ms > 0:
-                # per-group eviction: prune member groups whose
-                # inactivity exceeded the timeout, and their digests
-                live = last_seen >= now_ms - timeout_ms
-                if not live.all():
-                    dead = groups[~live]
-                    groups, last_seen = groups[live], last_seen[live]
-                    keep = ~np.isin(dig_group, dead)
-                    digs, dig_group = digs[keep], dig_group[keep]
+            # per-group eviction: prune member groups whose
+            # inactivity exceeded the timeout, and their digests
+            live = last_seen >= now_ms - timeout_ms
+            if not live.all():
+                dead = groups[~live]
+                groups, last_seen = groups[live], last_seen[live]
+                keep = ~np.isin(dig_group, dead)
+                digs, dig_group = digs[keep], dig_group[keep]
         else:
             empty = np.empty(0, dtype="int64")
             groups, last_seen, digs, dig_group = (
@@ -216,12 +248,16 @@ def _stream_distinct_bucketed(
             )
         for pdf in pdfs:
             gh = (
-                pd.util.hash_pandas_object(pdf[[group_col]], index=False)
+                pd.util.hash_pandas_object(
+                    pdf[[group_col]].astype(group_dtype), index=False
+                )
                 .to_numpy()
                 .view("int64")
             )
             dig = (
-                pd.util.hash_pandas_object(pdf[dig_cols], index=False)
+                pd.util.hash_pandas_object(
+                    pdf[dig_cols].astype(dig_dtypes), index=False
+                )
                 .to_numpy()
                 .view("int64")
             )
@@ -251,14 +287,8 @@ def _stream_distinct_bucketed(
                 dig_group.tolist(),
             )
         )
-        if timeout_ms > 0:
-            state.setTimeoutDuration(timeout_ms)
+        state.setTimeoutDuration(timeout_ms)
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms > 0
-        else GroupStateTimeout.NoTimeout
-    )
     bucket = F.pmod(F.xxhash64(F.col(group_col)), F.lit(group_buckets))
     return (
         df.withColumn("__bucket", bucket)
@@ -271,7 +301,7 @@ def _stream_distinct_bucketed(
                 "digs array<long>, dig_group array<long>"
             ),
             outputMode="append",
-            timeoutConf=timeout,
+            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
         )
     )
 

@@ -329,22 +329,30 @@ def _drain(
     A later batch that carries input proves the assertion false and
     raises instead of truncating; ``run_stream_to_memory`` rejects a
     source with a per-trigger limit before the query starts.
+
+    Without the flag the drain stops at the first empty batch AFTER
+    this run's first batch. A resumed query's first batch can be the
+    replay of the previous run's uncommitted (empty) batch; new input
+    lands only in the batches after it.
     """
     import time
 
     try:
         deadline = time.monotonic() + idle_timeout
+        first = None
         while q.isActive:
             lp = q.lastProgress
             if lp is not None:
-                later, rows = lp["batchId"] > 0, lp["numInputRows"]
-                if single_data_batch and later and rows > 0:
+                if first is None:
+                    first = q.recentProgress[0]["batchId"]
+                batch, rows = lp["batchId"], lp["numInputRows"]
+                if single_data_batch and batch > 0 and rows > 0:
                     raise RuntimeError(
                         f"stream {name!r}: single_data_batch, but batch "
-                        f"{lp['batchId']} carries {rows} input rows — the "
+                        f"{batch} carries {rows} input rows — the "
                         f"input did not land in batch 0"
                     )
-                if single_data_batch or (later and rows == 0):
+                if single_data_batch or (batch > first and rows == 0):
                     break  # everything committed
             if time.monotonic() > deadline:
                 raise TimeoutError(
@@ -420,9 +428,10 @@ def run_stream_to_memory(
     1000 on a 2-file input). The drain that is bounded for EVERY trigger
     and timeout conf is progress polling: ``availableNow`` plans all
     input up front and batches consume it monotonically, so the first
-    COMMITTED batch with ``numInputRows == 0`` after batch 0 proves all
-    available input (and any final watermark-commit emission) is already
-    in the sink — stop there. Queries that self-terminate (non-stateful,
+    COMMITTED batch with ``numInputRows == 0`` after the run's first
+    batch (batch 0 on a fresh checkpoint) proves all available input
+    (and any final watermark-commit emission) is already in the sink —
+    stop there. Queries that self-terminate (non-stateful,
     or ``NoTimeout``) exit the poll via ``isActive`` instead.
     """
     if single_data_batch:
